@@ -64,7 +64,11 @@ object Bench {
     Seq(f(), f(), f()).sorted.apply(1)
   }
 
-  private def q(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal: backslash, quote and every control char
+    * (< 0x20) escaped — a tab or CR in builder-authored SQL would
+    * otherwise make a reader's json.load fail. Shared by Bench, Verify,
+    * Profile and ScalingProbe. */
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -76,16 +80,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpusN = GraftSession.envCpus
+    val spark = GraftSession.local(cpusN)
     // warm the session (executor threads, IO stack, parquet footers,
     // codegen compiler for the common plan shapes) so startup cost isn't
     // attributed to the first queries
@@ -108,7 +104,6 @@ object Bench {
     // cold-build cost is timed here and reported separately in the
     // `warm_build` field so the two are never conflated.
     // canary BEFORE the warm section: warm-build spikes read against it
-    val cpusN = cpus.toInt
     val canaryPreJvm = med3(() => jvmCanarySec())
     val canaryPreSpark = med3(() => sparkCanarySec(spark, cpusN))
     val warmBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Double]

@@ -1,24 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *   runMain graft.Verify <sfDir> <outDir> [query…]
+  *
+  * Trailing names restrict both the dumps and oracle_sql.json to those
+  * queries, so `scripts/selfcheck.py <sfDir> <outDir>` checks exactly
+  * the subset. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing names restrict the dump (local spot-checks); the
     // driver passes exactly two args and gets every query
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     new java.io.File(outDir).mkdirs()
     // Timestamps go out as NTZ (session TZ is UTC) so the parquet values
     // compare naive-to-naive against DuckDB's.
@@ -62,18 +58,7 @@ object Verify {
         } catch { case _: Throwable => () }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Bench.q
     // PQ and k-means oracle SQL is only valid where the fixture codebook
     // geometry trains — on larger corpora those queries fall back to
     // rows-only rather than comparing against SQL for a codebook that
@@ -81,8 +66,9 @@ object Verify {
     val geometryDependent = graft.operators.Pq.GeometryDependentOracles ++
       graft.operators.Similarity.GeometryDependentOracles
     val oracleSql =
-      if (graft.operators.Similarity.fixtureOracleValid(spark, sfDir)) SparkEntry.oracleSql
-      else SparkEntry.oracleSql -- geometryDependent
+      (if (graft.operators.Similarity.fixtureOracleValid(spark, sfDir)) SparkEntry.oracleSql
+      else SparkEntry.oracleSql -- geometryDependent)
+        .filter { case (k, _) => only.isEmpty || only.contains(k) }
     val json = oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -855,7 +855,7 @@ object Dedup {
     // (graft.allpairs.localCapWork, default 5·10⁸ visits ≈ 1-2 s of
     // in-task merge) the whole prefix + candidate-join + verify
     // pipeline — measured at ~10 small stages of mostly launch overhead
-    // over a 42 k-row cached frame (ProbeAllpairsPhases) — collapses
+    // over a 42 k-row cached frame (OPTIMIZATION_r21.md) — collapses
     // into ONE pass over the element frame. Exact by the same theorem
     // the prefix filter rests on: prefix filtering is a LOSSLESS cut of
     // this very output (Bayardo), so the uncut form returns the

@@ -263,16 +263,6 @@ object Multimodal {
     }
   }
 
-  /** documents.text reinterpreted as an opaque binary payload — the
-    * binary-column ingestion path. */
-  def asMedia(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"),
-        lit("text/plain").as("media_type"))
-      .as[MediaRecord]
-  }
-
   /** Decode / feature-extract over partitions (the mapInPandas analog:
     * batched, partition-local, fixed output schema): real header dims
     * for image types, the stub codec elsewhere. */

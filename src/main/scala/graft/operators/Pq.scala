@@ -175,7 +175,7 @@ object Pq {
       // chain of small driver-coordinated jobs (2 Lloyd rounds of
       // crossJoin+argmax+collect over a bounded sample) that leaves
       // most cores idle — measured 1.6–2.9 s each, ~16 s sequential at
-      // sf0.1 (ProbePqPhases); submitted together the scheduler
+      // sf0.1 (OPTIMIZATION_r21.md); submitted together the scheduler
       // back-fills and the wall time is the slowest chain. Training
       // math is untouched — same jobs, same per-key cache entries
       // (CachedFrames builds under per-entry locks).
@@ -390,7 +390,7 @@ object Pq {
       // cluster the write by cid (r21, guide §6): without it every one
       // of the join's shuffle-partition tasks opened a file in every
       // cid directory (~tasks × clusters tiny files — measured 7.2 s of
-      // commit overhead for a 2,000-row write, ProbePqWrite); hashing
+      // commit overhead for a 2,000-row write, OPTIMIZATION_r21.md); hashing
       // rows to tasks by cid writes each cluster's codes from one task
       val parted = pqCodes(s, d).join(asg, "vec_id")
         .repartition(col("cid"))

@@ -3102,7 +3102,7 @@ object Queries {
       // runs on the value HISTOGRAM — ≤|distinct values|·|domains| rows,
       // render-scale at any corpus size (49 k rows at sf0.1). The
       // distributed form pays ~6 window/join/agg stages over that tiny
-      // frame (measured 1.2–1.6 s warm at 32 cores, ProbeMadPhases —
+      // frame (measured 1.2–1.6 s warm at 32 cores, OPTIMIZATION_r21.md —
       // pure per-stage overhead); when the measured histogram row count
       // fits one task the medians, deviations, and the rollup run as a
       // single in-task pass over integer CENTS ([[localMadRollup]] —

@@ -107,14 +107,7 @@ object ScalingGen {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else ScalingData.DefaultDir
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     ScalingData.generate(spark, src, out, copies)
     spark.stop()
   }
@@ -125,12 +118,7 @@ object ScalingGen {
   * exactly like Bench), then 3 interleaved passes with per-query
   * medians. One JSON line to stdout and to the given output file. */
 object ScalingProbe {
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  import Bench.q
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -142,15 +130,7 @@ object ScalingProbe {
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
       .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val spark = extra.foldLeft(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false"))((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32, extra)
     spark.range(1000).selectExpr("sum(id)").collect()
     Seq("events", "documents", "embeddings")
       .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
